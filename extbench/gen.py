@@ -22,8 +22,10 @@ here from that arithmetic, never by running the package.
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import multiprocessing
+import multiprocessing.resource_tracker
 import os
 import random
 import shutil
@@ -161,6 +163,10 @@ def _build_pool(root: str, final: str, n_pool: int, text_only: bool,
     ctx = multiprocessing.get_context("spawn")
     with ctx.Pool(procs) as pool:
         made = sum(n for _, n in pool.map(_gen_chunk, jobs))
+        pool.close()
+        pool.join()
+    del pool
+    _stop_resource_tracker()
     if made < n_pool:
         raise RuntimeError(f"pool {final}: generated {made} < {n_pool} docs")
     index = pq.read_table(os.path.join(tmp, "index"))
@@ -170,6 +176,20 @@ def _build_pool(root: str, final: str, n_pool: int, text_only: bool,
         shutil.rmtree(tmp)
         os.rename(tmp + ".trim", tmp)
     _publish(tmp, final)
+
+
+def _stop_resource_tracker() -> None:
+    """A spawn pool starts multiprocessing's resource tracker, a helper
+    process that otherwise lives until this process exits and ends only
+    after it: stop it and wait for it now, so the caller outlives every
+    process it started. The pool's semaphores must be gone first (their
+    finalizers unregister them), or the tracker removes them itself and
+    the finalizers fail."""
+    gc.collect()
+    tracker = multiprocessing.resource_tracker._resource_tracker
+    stop = getattr(tracker, "_stop", None)
+    if stop is not None:
+        stop()
 
 
 def _filter_tables(src: str, dst: str, ids: set[str], files: int) -> None:

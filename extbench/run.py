@@ -24,15 +24,20 @@ closed loop: one client submitting back-to-back committed jobs to
 Human-readable lines (metrics with unit and sample count, the host
 stamp) come first; the last line of stdout is the JSON result. The exit
 code is 1 when any operation failed, 2 when the package is missing.
+Run as a script, the driver exits only after every process it started
+(the JVM, Spark's Python daemon and workers, the input generator's
+helpers) has ended, on every path out, SIGTERM included.
 """
 
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import platform
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -76,11 +81,8 @@ def _stat_fields(pid: str) -> list[str] | None:
     return s[s.rindex(")") + 2:].split()
 
 
-def tree_cpu_s(root_pid: int | None = None) -> float:
-    """utime+stime+cutime+cstime summed over ``root_pid`` and all its
-    descendants: the driver Python, the JVM, the Python daemon and its
-    workers (reaped workers land in their parent's cutime/cstime)."""
-    root_pid = root_pid or os.getpid()
+def _proc_tree() -> tuple[dict[int, list[str]], dict[int, list[int]]]:
+    """Every live process: pid → stat fields, and ppid → child pids."""
     children: dict[int, list[int]] = {}
     fields: dict[int, list[str]] = {}
     for pid in os.listdir("/proc"):
@@ -91,15 +93,31 @@ def tree_cpu_s(root_pid: int | None = None) -> float:
             continue
         fields[int(pid)] = fl
         children.setdefault(int(fl[1]), []).append(int(pid))
-    total, todo = 0, [root_pid]
+    return fields, children
+
+
+def _descendants(fields, children, root_pid: int) -> list[int]:
+    out, todo = [], list(children.get(root_pid, ()))
     while todo:
         pid = todo.pop()
+        out.append(pid)
+        todo.extend(children.get(pid, ()))
+    return out
+
+
+def tree_cpu_s(root_pid: int | None = None) -> float:
+    """utime+stime+cutime+cstime summed over ``root_pid`` and all its
+    descendants: the driver Python, the JVM, the Python daemon and its
+    workers (reaped workers land in their parent's cutime/cstime)."""
+    root_pid = root_pid or os.getpid()
+    fields, children = _proc_tree()
+    total = 0
+    for pid in [root_pid] + _descendants(fields, children, root_pid):
         fl = fields.get(pid)
         if fl is not None:
             # fields after "pid (comm)": state=0 ppid=1 … utime=11 stime=12
             # cutime=13 cstime=14
             total += sum(int(x) for x in fl[11:15])
-        todo.extend(children.get(pid, ()))
     return total / _TICK
 
 
@@ -118,6 +136,66 @@ def ram_gb() -> float:
 
 
 # ---------------------------------------------------------------------------
+# process lifetime: the run ends only after everything it started
+# ---------------------------------------------------------------------------
+
+_PR_SET_CHILD_SUBREAPER = 36
+
+
+def adopt_orphans() -> None:
+    """Make this process the subreaper of every process it starts. A
+    descendant whose parent exits first (Spark's Python daemon and its
+    workers once the JVM has gone; they run in a process group of their
+    own) is then re-parented here, not to init, so ``end_descendants``
+    still finds it and waits for it."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(_PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        err = ctypes.get_errno()
+        raise OSError(err, f"prctl(PR_SET_CHILD_SUBREAPER): "
+                           f"{os.strerror(err)}")
+
+
+def end_descendants(grace_s: float = 15.0) -> None:
+    """Return only once every descendant of this process has ended and
+    been reaped: descendants get ``grace_s`` to exit by themselves (the
+    Python daemon exits once the JVM has closed its stdin), then SIGTERM,
+    and SIGKILL ``grace_s`` after that."""
+    t0 = time.monotonic()
+    sent = None
+    while True:
+        while True:  # reap every exited child
+            try:
+                pid, _ = os.waitpid(-1, os.WNOHANG)
+            except ChildProcessError:
+                break
+            if pid == 0:
+                break
+        fields, children = _proc_tree()
+        alive = [p for p in _descendants(fields, children, os.getpid())
+                 if fields[p][0] != "Z"]
+        if not alive and not children.get(os.getpid()):
+            return
+        waited = time.monotonic() - t0
+        sig = (signal.SIGKILL if waited > 2 * grace_s
+               else signal.SIGTERM if waited > grace_s else None)
+        if sig is not None and sig != sent:
+            print(f"extbench: sending {sig.name} to {len(alive)} "
+                  f"leftover process(es)", file=sys.stderr)
+            sent = sig
+        if sig is not None:
+            for pid in alive:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.1)
+
+
+def _exit_on_sigterm(signum, frame) -> None:
+    sys.exit(128 + signum)  # runs every ``finally`` on the way out
+
+
+# ---------------------------------------------------------------------------
 # session and loop
 # ---------------------------------------------------------------------------
 
@@ -133,6 +211,9 @@ def start_session(cpus: int, scratch: str, event_dir: str | None):
     os.environ["SPARK_DRIVER_MEM"] = DRIVER_MEM
     os.environ["SPARK_LOCAL_DIRS"] = tmp
     os.environ["TMPDIR"] = tmp
+    # spark-submit's short-lived launcher JVM: no perf-data file in /tmp
+    os.environ["SPARK_LAUNCHER_OPTS"] = (f"-XX:-UsePerfData "
+                                         f"-Djava.io.tmpdir={tmp}")
     # executors' Python workers import the package from the checkout
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
@@ -348,5 +429,12 @@ def main(argv: list[str] | None = None, sizes: dict | None = None,
 
 if __name__ == "__main__":
     sys.path.insert(0, ROOT)
-    from extbench.run import main as _main  # package-relative imports
-    sys.exit(_main())
+    # package-relative imports
+    from extbench.run import adopt_orphans, end_descendants, main as _main
+    signal.signal(signal.SIGTERM, _exit_on_sigterm)
+    adopt_orphans()
+    try:
+        code = _main()
+    finally:
+        end_descendants()
+    sys.exit(code)

@@ -15,6 +15,8 @@ import json
 import os
 import re
 import shutil
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -132,3 +134,27 @@ def test_corrupted_ladder_output_counts_failed(spark):
 
     _rewrite(data_dir, corrupt)
     assert wl.check(out) == (wl.docs, 2)
+
+
+_ORPHAN_PROBE = """
+import os, subprocess, sys
+sys.path.insert(0, sys.argv[1])
+from extbench.run import adopt_orphans, end_descendants
+adopt_orphans()
+# a shell that leaves behind a sleep which ignores SIGTERM, then exits
+out = subprocess.run(["bash", "-c", "(trap '' TERM; exec sleep 300 "
+                      ">/dev/null 2>&1) & echo $!"], capture_output=True,
+                     text=True).stdout
+end_descendants(grace_s=0.5)
+print(out.strip())
+"""
+
+
+def test_driver_ends_orphaned_descendants():
+    """A process the run started, orphaned and deaf to SIGTERM, has ended
+    by the time ``end_descendants`` returns."""
+    out = subprocess.run([sys.executable, "-c", _ORPHAN_PROBE, run.ROOT],
+                         capture_output=True, text=True, timeout=60)
+    assert out.returncode == 0, out.stderr
+    pid = int(out.stdout.split()[-1])
+    assert not os.path.exists(f"/proc/{pid}")
